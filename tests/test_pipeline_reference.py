@@ -172,3 +172,13 @@ def test_sink_projection_all_strings(wide):
     sink = to_sink_projection(df)
     assert all(t == "string" for _, t in sink.dtypes)
     assert all(("|" not in c) and (" " not in c) for c in sink.columns)
+
+
+def test_sink_projection_quotes_awkward_source_names(spark):
+    """Source names with a space and a backtick survive the one-shot
+    selectExpr: values are read from the right column and the output
+    names are still sanitized."""
+    src = spark.createDataFrame([(1, 2.5)], "id int, `odd ``name`` x` double")
+    sink = to_sink_projection(src)
+    assert sink.columns == ["id", "odd_name_x"]
+    assert sink.first().asDict() == {"id": "1", "odd_name_x": "2.5"}

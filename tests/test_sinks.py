@@ -1,7 +1,13 @@
-"""E3 flush lifecycle: append -> dedup+swap -> truncate staging."""
+"""E3 flush lifecycle: staging UNION table -> keep-last -> one atomic
+rewrite -> truncate staging."""
 
 from __future__ import annotations
 
+import hashlib
+import os
+
+import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -39,6 +45,112 @@ def test_flush_lifecycle(spark, tmp_path):
     # empty staging short-circuits (P9): table untouched
     sinks.flush(spark, staging, table, key="c_custkey", order_col="_seq")
     assert spark.read.parquet(table).count() == 100
+
+
+def _dir_digest(path):
+    """Every file under ``path`` with a hash of its bytes."""
+    out = {}
+    for d, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(d, f)
+            with open(full, "rb") as fh:
+                out[os.path.relpath(full, path)] = hashlib.sha256(fh.read()).hexdigest()
+    return out
+
+
+def _keyed_frame(spark, n, seq, value):
+    return spark.range(n).select(
+        F.col("id").alias("k"), F.lit(seq).alias("_seq"), F.lit(value).alias("v")
+    )
+
+
+def test_first_flush_creates_missing_table(spark, tmp_path):
+    staging = str(tmp_path / "staging")
+    table = str(tmp_path / "table")
+    # staging carries duplicate keys: the first flush dedups them too
+    _keyed_frame(spark, 30, 1, "old").unionByName(_keyed_frame(spark, 10, 2, "new")).write.parquet(
+        staging
+    )
+    assert not os.path.exists(table)
+
+    sinks.flush(spark, staging, table, key="k", order_col="_seq")
+
+    out = spark.read.parquet(table)
+    assert out.count() == 30
+    assert out.filter(F.col("v") == "new").count() == 10
+    assert spark.read.parquet(staging).count() == 0
+    assert not os.path.exists(table + ".inprogress")
+
+
+def test_flush_without_order_col_keeps_one_row_per_key(spark, tmp_path):
+    staging = str(tmp_path / "staging")
+    table = str(tmp_path / "table")
+    _keyed_frame(spark, 20, 1, "a").write.parquet(staging)
+    sinks.flush(spark, staging, table, key="k", order_col=None)
+    sinks.overwrite_table(_keyed_frame(spark, 25, 2, "b"), staging)
+    sinks.flush(spark, staging, table, key="k", order_col=None)
+
+    out = spark.read.parquet(table)
+    assert out.count() == 25
+    assert out.select("k").distinct().count() == 25
+
+
+def test_failed_flush_leaves_table_and_staging_unchanged(spark, tmp_path):
+    """Staging whose key type cannot be read from the table's files:
+    the flush raises, the table's bytes are untouched and staging still
+    holds its rows (truncation runs only after a successful swap)."""
+    staging = str(tmp_path / "staging")
+    table = str(tmp_path / "table")
+    _keyed_frame(spark, 20, 1, "a").write.parquet(staging)
+    sinks.flush(spark, staging, table, key="k", order_col="_seq")
+    before = _dir_digest(table)
+
+    bad = _keyed_frame(spark, 5, 2, "b").withColumn("k", F.array(F.col("k")))
+    sinks.overwrite_table(bad, staging)
+    with pytest.raises(Py4JJavaError):
+        sinks.flush(spark, staging, table, key="k", order_col="_seq")
+
+    assert _dir_digest(table) == before
+    assert spark.read.parquet(staging).count() == 5
+
+
+def test_flush_runs_at_most_four_spark_jobs(spark, tmp_path):
+    """One flush: the isEmpty probe, the single union-dedup rewrite
+    (shuffle + write) and the staging truncate's empty write. Schemas
+    come from file footers, not inference jobs. The former
+    append-then-rewrite flow ran 8."""
+    staging = str(tmp_path / "staging")
+    table = str(tmp_path / "table")
+    _keyed_frame(spark, 50, 1, "a").write.parquet(staging)
+    sinks.flush(spark, staging, table, key="k", order_col="_seq")
+    _keyed_frame(spark, 20, 2, "b").write.mode("overwrite").parquet(staging)
+
+    sc = spark.sparkContext
+    group = "test_flush_job_count"
+    sc.setJobGroup(group, "one flush")
+    try:
+        sinks.flush(spark, staging, table, key="k", order_col="_seq")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+    assert spark.read.parquet(table).filter(F.col("v") == "b").count() == 20
+
+
+def test_footer_schema_read_matches_inference(spark, tmp_path):
+    """The sinks read Spark-written tables with the schema from a file
+    footer; it must be the schema Spark's own inference returns."""
+    path = str(tmp_path / "typed")
+    spark.sql(
+        "SELECT CAST(id AS INT) AS i, CAST(id AS DECIMAL(12, 2)) AS d, "
+        "TIMESTAMP'2024-01-02 03:04:05' AS ts, DATE'2024-01-02' AS dt, "
+        "named_struct('a', id, 'b', array(CAST(id AS STRING))) AS s, "
+        "map('k', 1.5D) AS m FROM range(3)"
+    ).write.parquet(path)
+    inferred = spark.read.parquet(path)
+    read = sinks._read_parquet(spark, path)
+    assert read.schema == inferred.schema
+    assert sorted(read.collect()) == sorted(inferred.collect())
 
 
 def test_approx_distinct_error_envelope(spark):

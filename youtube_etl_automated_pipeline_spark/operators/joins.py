@@ -36,22 +36,25 @@ def broadcast_enrich(
     keys = [on] if isinstance(on, str) else list(on)
     marked = dim.withColumn("_dim_matched", F.lit(True))
     out = fact.join(F.broadcast(marked), keys, "left")
-    for col_name, default in (defaults or {}).items():
-        if preserve_matched_nulls:
-            out = out.withColumn(
-                col_name,
-                F.when(F.col("_dim_matched").isNull(), F.lit(default)).otherwise(F.col(col_name)),
-            )
-        else:
-            out = out.withColumn(col_name, F.coalesce(F.col(col_name), F.lit(default)))
-    return out.drop("_dim_matched")
+    defaults = defaults or {}
+    if preserve_matched_nulls:
+        filled = {
+            c: F.when(F.col("_dim_matched").isNull(), F.lit(d)).otherwise(F.col(c))
+            for c, d in defaults.items()
+        }
+    else:
+        filled = {c: F.coalesce(F.col(c), F.lit(d)) for c, d in defaults.items()}
+    return out.withColumns(filled).drop("_dim_matched")
 
 
 def dim_last_wins(dim: DataFrame, key: str | Sequence[str], order_by: Sequence[Column | str]) -> DataFrame:
     """Dict-comprehension last-wins dup resolution for dim tables
-    (dataingestion3.py:37: 65 duplicated codes, last wins)."""
+    (dataingestion3.py:37: 65 duplicated codes, last wins). Dims are
+    broadcast-sized, so they are coalesced to one partition first: that
+    partition already satisfies the window's clustering and the dedup
+    runs without a shuffle."""
     keys = [key] if isinstance(key, str) else list(key)
-    return keep_last(dim, keys, order_by)
+    return keep_last(dim.coalesce(1), keys, order_by)
 
 
 def anti_join_waterfall(
@@ -104,9 +107,9 @@ def update_merge(
         on, *[F.col(c).alias(f"_upd_{c}") for c in update_cols]
     )
     out = fact.join(renamed, on, "left")
-    for c in update_cols:
-        if c in fact.columns:
-            out = out.withColumn(c, F.coalesce(F.col(f"_upd_{c}"), F.col(c)))
-        else:
-            out = out.withColumn(c, F.col(f"_upd_{c}"))
-    return out.drop(*[f"_upd_{c}" for c in update_cols])
+    existing = set(fact.columns)
+    merged = {
+        c: F.coalesce(F.col(f"_upd_{c}"), F.col(c)) if c in existing else F.col(f"_upd_{c}")
+        for c in update_cols
+    }
+    return out.withColumns(merged).drop(*[f"_upd_{c}" for c in update_cols])

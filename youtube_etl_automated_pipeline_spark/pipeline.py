@@ -46,6 +46,14 @@ ANALYTICS_COLS = (
 )
 
 
+def _last_wins(dim: DataFrame, key: str) -> DataFrame:
+    """Dim dup keys resolve to the row read last (the reference's
+    dict-comprehension overwrite)."""
+    return dim_last_wins(
+        dim.withColumn("_ord", F.monotonically_increasing_id()), key, ["_ord"]
+    ).drop("_ord")
+
+
 def ingest_merge(videos: DataFrame, channels: DataFrame | None = None) -> DataFrame:
     """Stage 1 (dataingestion1.py:104-181): keep-last dedup by video_id
     over ingest_seq (A5/J7), then channel enrichment (J1) with
@@ -53,11 +61,7 @@ def ingest_merge(videos: DataFrame, channels: DataFrame | None = None) -> DataFr
     (channel.json has dup UCmHCyBKDCQk5GwJB3NvTbdw)."""
     deduped = keep_last(videos, ["video_id"], ["ingest_seq"])
     if channels is not None and "channel_id" in deduped.columns:
-        dim = dim_last_wins(
-            channels.withColumn("_ord", F.monotonically_increasing_id()),
-            "channel_id",
-            ["_ord"],
-        ).drop("_ord")
+        dim = _last_wins(channels, "channel_id")
         deduped = broadcast_enrich(
             deduped,
             dim,
@@ -73,16 +77,16 @@ def derive_codes(df: DataFrame, resource_names: DataFrame | None = None) -> Data
     cleaning chain (P5-P7), Len recompute (F3), prefix code (F6), last
     char (F7), resource team lookup (J2, miss -> '')."""
     raw = X.extract_last_word(F.col("title"))
-    out = df.withColumn("main_code", X.clean_main_code(raw))
-    out = out.withColumn("code_len", F.length("main_code"))
-    out = out.withColumn("code", X.code_prefix(F.col("main_code"), F.col("code_len")))
-    out = out.withColumn("resource_code", X.last_char(F.col("main_code")))
+    main_code = F.col("main_code")
+    out = df.withColumn("main_code", X.clean_main_code(raw)).withColumns(
+        {
+            "code_len": F.length(main_code),
+            "code": X.code_prefix(main_code, F.length(main_code)),
+            "resource_code": X.last_char(main_code),
+        }
+    )
     if resource_names is not None:
-        dim = dim_last_wins(
-            resource_names.withColumn("_ord", F.monotonically_increasing_id()),
-            "employee_code",
-            ["_ord"],
-        ).drop("_ord")
+        dim = _last_wins(resource_names, "employee_code")
         out = broadcast_enrich(
             out.withColumn("employee_code", F.col("resource_code")),
             dim.withColumnRenamed("team", "resource_name"),
@@ -98,11 +102,7 @@ def enrich_shownames(df: DataFrame, shownames: DataFrame) -> DataFrame:
     broadcaster / category. Dup codes last-wins (65 in showname.json);
     miss -> ''; a MATCHED-but-null show_name stays null (miss-vs-null
     distinction, SURVEY section 4)."""
-    dim = dim_last_wins(
-        shownames.withColumn("_ord", F.monotonically_increasing_id()),
-        "code",
-        ["_ord"],
-    ).drop("_ord")
+    dim = _last_wins(shownames, "code")
     return broadcast_enrich(
         df,
         dim,
@@ -125,36 +125,30 @@ def derive_final_metrics(df: DataFrame, cpm_categories: DataFrame | None = None)
     null-safe parses (F18: null -> 0), CPM category CASE (F23/J4)."""
     local_date, local_time = D.utc_to_local_date_time(F.col("published_at"))
     views = F.coalesce(F.col("views"), F.lit(0))
-    out = (
-        df.withColumn("published_date_local", local_date)
-        .withColumn("published_time_local", local_time)
-        .withColumn(
-            "net_subscribers",
-            M.net_subscribers(F.col("subscribers_gained"), F.col("subscribers_lost")),
-        )
-        .withColumn("watch_hours", M.minutes_to_hours(F.coalesce(F.col("minutes_watched"), F.lit(0.0))))
-        .withColumn(
-            "avg_view_duration_hms",
-            D.seconds_to_hms(F.coalesce(F.col("avg_view_duration"), F.lit(0))),
-        )
-        .withColumn(
-            "engagement_pct",
-            M.engagement_pct(
+    revenue = F.coalesce(F.col("estimated_revenue"), F.lit(0.0))
+    out = df.withColumns(
+        {
+            "published_date_local": local_date,
+            "published_time_local": local_time,
+            "net_subscribers": M.net_subscribers(
+                F.col("subscribers_gained"), F.col("subscribers_lost")
+            ),
+            "watch_hours": M.minutes_to_hours(F.coalesce(F.col("minutes_watched"), F.lit(0.0))),
+            "avg_view_duration_hms": D.seconds_to_hms(
+                F.coalesce(F.col("avg_view_duration"), F.lit(0))
+            ),
+            "engagement_pct": M.engagement_pct(
                 F.coalesce(F.col("comments"), F.lit(0)),
                 F.coalesce(F.col("likes"), F.lit(0)),
                 F.coalesce(F.col("shares"), F.lit(0)),
                 views,
             ),
-        )
-        .withColumn("cpv", M.cpv(F.coalesce(F.col("estimated_revenue"), F.lit(0.0)), views))
-        .withColumn("rpm", M.rpm(F.coalesce(F.col("estimated_revenue"), F.lit(0.0)), views))
+            "cpv": M.cpv(revenue, views),
+            "rpm": M.rpm(revenue, views),
+        }
     )
     if cpm_categories is not None:
-        dim = dim_last_wins(
-            cpm_categories.withColumn("_ord", F.monotonically_increasing_id()),
-            "show_name",
-            ["_ord"],
-        ).drop("_ord")
+        dim = _last_wins(cpm_categories, "show_name")
         out = broadcast_enrich(
             out,
             dim,
@@ -196,9 +190,14 @@ def to_sink_projection(df: DataFrame) -> DataFrame:
     """E3 prep (ingestdatainbigquery.py:37-46,127): F8 sanitize column
     names + F9 cast everything to string (autodetect-parity). A
     projection, not a rewrite."""
-    return df.select(
+    return df.selectExpr(
         *[
-            F.col(c).cast("string").alias(X.sanitize_column_name(c))
+            f"CAST({_quote(c)} AS STRING) AS {_quote(X.sanitize_column_name(c))}"
             for c in df.columns
         ]
     )
+
+
+def _quote(name: str) -> str:
+    """Backtick-quote a column name for a SQL expression."""
+    return "`" + name.replace("`", "``") + "`"

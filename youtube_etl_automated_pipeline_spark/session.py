@@ -236,6 +236,11 @@ def get_spark(app_name: str = "youtube_etl_spark", shuffle_partitions: int | Non
         # everywhere (int(x or 0) / try-except, SURVEY section 1.1);
         # ANSI mode would turn those into runtime errors.
         .config("spark.sql.ansi.enabled", "false")
+        # PySpark's DataFrame debugging records the Python call site of
+        # every Column and DataFrame call in the JVM: about 8 extra py4j
+        # round trips per call (11 instead of 3 for F.col), paid on every
+        # plan built. Errors keep their message without the call site.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     fast_tmp = _fast_tmp_dir()
     if fast_tmp:

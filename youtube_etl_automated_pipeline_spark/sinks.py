@@ -6,27 +6,57 @@ table existence, :53-76), window-dedup the table with ROW_NUMBER SQL
 and swap it in place (:84-96), then truncate staging keeping the
 header (:103-112). Re-expressed over parquet table directories:
 
-- K4  append_table      - mode('append') / create on first write
-- A6  dedup_table_swap  - the same ROW_NUMBER SQL via spark.sql,
-                          written to a temp dir and atomically swapped
+- K1  overwrite_table   - write to a temp dir, then swap it in; the one
+                          table-swap implementation every rewrite uses
+- K4  append_table      - mode('append') / create on first write (the
+                          staging write)
+- A6  dedup_table_swap  - the ROW_NUMBER dedup (keep_last) over the
+                          table, or over table UNION incoming staging
+                          rows, rewritten once through overwrite_table
 - K5  truncate_staging  - overwrite with the empty (limit 0) frame,
                           schema preserved
-- E3  flush             - the composition
+- E3  flush             - staging UNION table -> keep-last -> one
+                          atomic rewrite, then truncate staging
 
-Scale notes: append is a no-shuffle write; the dedup pass shuffles
-once on the key (window, not dropDuplicates — SURVEY section 4 note on
-keep-last); the swap keeps readers consistent (a table format with
-MERGE — Delta/Iceberg — replaces the swap at production scale).
+Scale notes: the flush is one plan: staging and the table are unioned
+and deduped together (one shuffle on the key; window, not
+dropDuplicates — SURVEY section 4 note on keep-last) and written once.
+Staged rows are not first appended into the table and then rewritten,
+so each flush writes the table once plus the empty staging. The swap
+keeps readers consistent (a table format with MERGE — Delta/Iceberg —
+replaces the swap at production scale).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from youtube_etl_automated_pipeline_spark.operators.dedup import keep_last
+
+
+# footer key under which Spark's parquet writer stores the exact schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` for a table written by Spark, minus
+    the schema-inference job: the schema Spark would infer is the one
+    it stored in each file's footer, read here on the driver. Tables
+    without that footer key fall back to inference."""
+    import pyarrow.parquet as pq
+
+    names = os.listdir(path) if os.path.isdir(path) else []
+    files = sorted(f for f in names if f.endswith(".parquet") and not f.startswith(("_", ".")))
+    meta = pq.read_metadata(os.path.join(path, files[0])).metadata if files else None
+    if not meta or _SPARK_SCHEMA_KEY not in meta:
+        return spark.read.parquet(path)
+    schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(path)
 
 
 def append_table(df: DataFrame, path: str) -> None:
@@ -39,7 +69,9 @@ def append_table(df: DataFrame, path: str) -> None:
 def overwrite_table(df: DataFrame, path: str) -> None:
     """K1: full overwrite (clear + rewrite, dataingestion1.py:173-174).
     Routed through a temp dir so a failure mid-write never leaves a
-    half-table (the reference's clear()-then-write has that hole)."""
+    half-table (the reference's clear()-then-write has that hole).
+    ``df`` may read ``path`` itself: the write completes before the
+    old directory is removed."""
     tmp = path + ".inprogress"
     df.write.mode("overwrite").parquet(tmp)
     if os.path.exists(path):
@@ -48,7 +80,12 @@ def overwrite_table(df: DataFrame, path: str) -> None:
 
 
 def dedup_table_swap(
-    spark: SparkSession, path: str, key: str = "video_id", order_col: str | None = None
+    spark: SparkSession,
+    path: str,
+    key: str = "video_id",
+    order_col: str | None = None,
+    *,
+    incoming: DataFrame | None = None,
 ) -> None:
     """A6/W1: the reference's BigQuery dedup
     (``ROW_NUMBER() OVER (PARTITION BY video_id ORDER BY ...) ...
@@ -58,22 +95,31 @@ def dedup_table_swap(
     arbitrary-row-per-key. We demand a real ``order_col`` for
     determinism (keep-last); pass None to reproduce the reference's
     arbitrary pick (dropDuplicates).
+
+    ``incoming`` rows (the flush's staging) are deduped together with
+    the table in the same pass, so they are written once, not appended
+    and then rewritten. The table is read with ``incoming``'s schema
+    (no schema-inference job; ``incoming`` defines the table's columns)
+    and may be missing (first flush). A failure leaves the table as it
+    was.
     """
-    table = spark.read.parquet(path)
+    if incoming is None:
+        table = _read_parquet(spark, path)
+    elif os.path.exists(path):
+        table = spark.read.schema(incoming.schema).parquet(path).unionByName(incoming)
+    else:
+        table = incoming
     if order_col is None:
         deduped = table.dropDuplicates([key])
     else:
         deduped = keep_last(table, [key], [order_col])
-    tmp = path + ".inprogress"
-    deduped.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.replace(tmp, path)
+    overwrite_table(deduped, path)
 
 
 def truncate_staging(spark: SparkSession, path: str) -> None:
     """K5: clear the staging table but keep its schema (the reference
     re-appends the header row after clear(), :103-112)."""
-    schema_keeper = spark.read.parquet(path).limit(0)
+    schema_keeper = _read_parquet(spark, path).limit(0)
     overwrite_table(schema_keeper, path)
 
 
@@ -84,14 +130,15 @@ def flush(
     key: str = "video_id",
     order_col: str | None = None,
 ) -> None:
-    """E3: staging -> durable table append -> window dedup + swap ->
-    staging truncate (ingestdatainbigquery.py:115-136). Empty staging
-    short-circuits (P9, :119-121)."""
-    staging = spark.read.parquet(staging_path)
+    """E3: staging UNION durable table -> window dedup -> one atomic
+    rewrite -> staging truncate (ingestdatainbigquery.py:115-136; the
+    reference's append + dedup-swap become one pass). Empty staging
+    short-circuits (P9, :119-121). Staging is truncated only after the
+    swap, so a failed flush leaves both tables as they were."""
+    staging = _read_parquet(spark, staging_path)
     if staging.isEmpty():
         return
-    append_table(staging, table_path)
-    dedup_table_swap(spark, table_path, key, order_col)
+    dedup_table_swap(spark, table_path, key, order_col, incoming=staging)
     truncate_staging(spark, staging_path)
 
 
@@ -173,11 +220,7 @@ def compact_table(
     ]
     total_bytes = sum(os.path.getsize(f) for f in files_before)
     n_out = max(1, -(-total_bytes // target_file_bytes))  # ceil div
-    df = spark.read.parquet(path)
-    tmp = path + ".compacting"
-    df.coalesce(int(n_out)).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.replace(tmp, path)
+    overwrite_table(_read_parquet(spark, path).coalesce(int(n_out)), path)
     files_after = [f for f in os.listdir(path) if f.endswith(".parquet")]
     return len(files_before), len(files_after)
 

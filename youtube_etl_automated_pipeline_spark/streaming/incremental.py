@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import itertools
 import os
-import shutil
 from collections.abc import Callable, Sequence
 from contextlib import contextmanager
 
@@ -34,6 +33,7 @@ from pyspark.sql import functions as F
 
 from youtube_etl_automated_pipeline_spark.functions.compat import units
 from youtube_etl_automated_pipeline_spark.operators.dedup import keep_last
+from youtube_etl_automated_pipeline_spark.sinks import overwrite_table
 
 # Schema for event files whose ts column is PHYSICALLY int64 nanos
 # (files written by our own sinks/tests as bigint). The batch path
@@ -341,11 +341,7 @@ def foreach_batch_upsert(
             merged = batch
         deduped = keep_last(merged, list(keys), ["_batch_id", *order_by])
         record_batch_plan("upsert_batch", deduped)
-        tmp = state_dir + ".inprogress"
-        deduped.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.replace(tmp, state_dir)
+        overwrite_table(deduped, state_dir)
 
     return _apply
 

@@ -21,7 +21,7 @@ Scale notes: each batch costs one shuffle on the key (the keep-last
 window) plus a state-table rewrite; at real scale the state table is
 partitioned by key range so a batch rewrites only touched partitions,
 or lands in a MERGE-capable v2 table format — semantics identical.
-The atomic temp-dir swap (write → os.replace) means a crashed batch
+The atomic temp-dir swap (``sinks.overwrite_table``) means a crashed batch
 never corrupts state (reference parity: the staging-merge-flush cycle
 of ingestdatainbigquery.py:103-136, with deletes added).
 """
@@ -29,12 +29,12 @@ of ingestdatainbigquery.py:103-136, with deletes added).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from youtube_etl_automated_pipeline_spark.operators.dedup import keep_last
+from youtube_etl_automated_pipeline_spark.sinks import overwrite_table
 from youtube_etl_automated_pipeline_spark.streaming.incremental import (
     record_batch_plan,
     record_stream_plan,
@@ -68,11 +68,7 @@ def foreach_batch_merge(state_dir: str):
         state = read_state(spark, state_dir)
         new_state = merge_batch(state, batch_df)
         record_batch_plan("cdc_merge_batch", new_state)
-        tmp = state_dir + ".inprogress"
-        new_state.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.replace(tmp, state_dir)
+        overwrite_table(new_state, state_dir)
 
     return _apply
 
